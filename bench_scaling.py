@@ -251,13 +251,12 @@ Scaling efficiency (docs/sec, (thr_4N/thr_N)/4, target >= 0.8):
 
 scan (bucketed, {N_BUCKETS} tasks) -> [no repartition] -> co-partitioned
 LEFT JOIN per-doc OCR map (built shuffle-free: explode refs is narrow,
-groupBy doc_id reuses the bucketing) -> ONE fused codegen projection
-(patch + strip + translate + re-offset) -> sink. OCR side: distinct
-media_ref + sha2-distinct payloads (the only shuffles, both on small
-ref/hash tables) -> mapInPandas over Arrow batches. The ocr_side join
-is left to AQE (broadcast_ocr=False default): an explicit broadcast of
-a ~1M-entry map is a single-threaded driver build — a fixed serial
-cost that caps strong scaling.
+groupBy doc_id reuses the bucketing) -> ONE fused projection
+(patch + strip + translate + re-offset) -> sink. OCR side: one row per
+media_ref + one row per sha2 payload -> mapInPandas over Arrow batches.
+The ocr_side join is left to AQE: an explicit broadcast of a ~1M-entry
+map is a single-threaded driver build — a fixed serial cost that caps
+strong scaling.
 """
         )
     print(json.dumps(result))

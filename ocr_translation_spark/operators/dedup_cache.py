@@ -35,21 +35,12 @@ def dedup_compute_with_cache(
     cache_df: DataFrame | None = None,
     use_cache: bool = True,
     hash_col: str = "h",
-    broadcast_results: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Attach ``result_col`` = f(payload) to every row, computing f once
     per distinct payload.
 
     ``compute_fn`` maps a pandas Series of payloads to a Series of
     results (vectorized; runs inside ``mapInPandas``).
-
-    ``broadcast_results=False`` by default: the distinct-results side
-    scales with the corpus, and an explicit broadcast forces a
-    single-threaded driver-side build of the whole table (the same
-    scale hazard extract()'s ``broadcast_ocr=False`` documents). AQE
-    upgrades the join to a broadcast at runtime whenever the side is
-    actually small — the hint is only for callers that KNOW the
-    distinct set is tiny.
 
     Returns ``(df_with_result, new_cache_entries)``;
     new_cache_entries has columns (hash_col, result_col).
@@ -88,6 +79,4 @@ def dedup_compute_with_cache(
 
     computed = misses.mapInPandas(_compute, schema=out_schema)
     per_hash = computed if hits is None else hits.unionByName(computed)
-    if broadcast_results:
-        per_hash = F.broadcast(per_hash)
     return hashed.join(per_hash, hash_col, "left"), computed

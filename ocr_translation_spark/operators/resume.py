@@ -136,7 +136,8 @@ class ResumableRun:
 
     def _work_bucket(self, bucketed, media, b: int, kwargs: dict):
         """The heavy, parallel-safe part of one bucket: extract + data
-        write + stats. Returns (stats_row, new_cache_df, wall_ms)."""
+        write + stats. Returns (stats_row, extract_result, wall_ms) with
+        the result's ``ocr_payloads`` persisted (the caller unpersists)."""
         from pyspark.sql import Observation
 
         t0 = time.monotonic()
@@ -145,7 +146,7 @@ class ResumableRun:
         # persist BEFORE the output write: the write materializes
         # the OCR mapInPandas subtree into the cache, so the cache
         # merge reuses it instead of re-OCRing every miss
-        new_cache = res.new_ocr_cache.persist()
+        res.ocr_payloads.persist()
         bucket_dir = os.path.join(self.out_dir, f"bucket={b}")
         # stats ride the write via observe() — re-reading the bucket
         # output for a count/sum would re-scan the entire corpus output
@@ -158,7 +159,7 @@ class ResumableRun:
         ).write.mode("overwrite").parquet(bucket_dir)
         stats = obs.get
         wall_ms = int((time.monotonic() - t0) * 1000)
-        return stats, new_cache, wall_ms
+        return stats, res, wall_ms
 
     def _check_protocol(self) -> None:
         """Bucket membership is pmod(hash(doc_id), n_buckets): lineage
@@ -275,7 +276,7 @@ class ResumableRun:
             for i, b in enumerate(pending):
                 if fail_after_buckets is not None and i >= fail_after_buckets:
                     raise RuntimeError(f"simulated crash before bucket {b}")
-                stats, new_cache, wall_ms = self._work_bucket(
+                stats, res, wall_ms = self._work_bucket(
                     bucketed, media, b, extract_kwargs
                 )
                 try:
@@ -284,15 +285,15 @@ class ResumableRun:
                         # store-always (OCRQueue.js:85): grow the persisted
                         # cache; later buckets hit instead of re-OCRing.
                         self.cache_catalog.merge_cache(
-                            new_cache, "ocr_cache", "h"
+                            res.new_ocr_cache, "ocr_cache", "h"
                         )
                         extract_kwargs["ocr_cache"] = (
                             self.cache_catalog.load_cache("ocr_cache", "h")
                         )
                 finally:
                     # a failed commit must not leak the bucket's persisted
-                    # OCR-cache blocks for the session lifetime
-                    new_cache.unpersist()
+                    # OCR blocks for the session lifetime
+                    res.ocr_payloads.unpersist()
                 processed.append(b)
             return processed
 
@@ -310,7 +311,7 @@ class ResumableRun:
             )
             with commit_lock:
                 kwargs = dict(shared)
-            stats, new_cache, wall_ms = self._work_bucket(
+            stats, res, wall_ms = self._work_bucket(
                 bucketed, media, b, kwargs
             )
             try:
@@ -318,13 +319,13 @@ class ResumableRun:
                     self._commit_bucket(b, stats, wall_ms)
                     if self.cache_catalog is not None and media is not None:
                         self.cache_catalog.merge_cache(
-                            new_cache, "ocr_cache", "h"
+                            res.new_ocr_cache, "ocr_cache", "h"
                         )
                         shared["ocr_cache"] = self.cache_catalog.load_cache(
                             "ocr_cache", "h"
                         )
             finally:
-                new_cache.unpersist()
+                res.ocr_payloads.unpersist()
             return b
 
         # Auto-compaction renames + deletes the live cache dir; threads

@@ -8,9 +8,11 @@ dropped, and ``text`` spans are scored by boilerplate-token density
 ``semantics.BOILER_THRESHOLD``.
 
 This stage is pure Catalyst expression work over the span array —
-``F.filter`` with a lambda — so it stays inside whole-stage codegen,
-costs zero shuffles, and never crosses the Python boundary. Exactly the
-semantics of ``semantics.keep_span`` (the golden spec).
+``F.filter`` with a lambda — so it costs zero shuffles and never
+crosses the Python boundary. On Spark 4.1 ``filter`` is
+CodegenFallback: its lambda is evaluated interpreted, element by
+element, inside the compiled stage.
+Exactly the semantics of ``semantics.keep_span`` (the golden spec).
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ HTTP call) replaced by a deterministic token-wise dictionary with
 identity fallback (FIXTURES.md section 3), plus the text-hash cache at
 ``src/utils/MessageQueue/TranslationQueue.js:53-83`` — which becomes
 unnecessary as a TABLE here because the dictionary lookup is a pure
-in-codegen map literal (the cache would cost a shuffle to save a hash
+in-plan map literal (the cache would cost a shuffle to save a hash
 lookup; see dedup_cache.py for the generic cached-compute operator used
 where compute IS expensive).
 
@@ -13,11 +13,12 @@ Two implementations with identical semantics:
 
 * ``translate_text_col`` / ``translate_spans`` — pure Catalyst: the
   ~200-entry dictionary is a ``create_map`` literal, applied with
-  ``transform`` + ``element_at`` inside the span array. Whole-stage
-  codegen, no Python, no shuffle, and the dictionary ships with the
-  plan (the moral equivalent of a broadcast variable for a dict this
-  small; a million-entry dictionary would instead broadcast-join an
-  exploded token stream).
+  ``transform`` + ``element_at`` inside the span array. No Python, no
+  shuffle (``transform`` is CodegenFallback on Spark 4.1, so the
+  lambda is evaluated interpreted, token by token), and the dictionary
+  ships with the plan (the moral equivalent of a broadcast variable
+  for a dict this small; a million-entry dictionary would instead
+  broadcast-join an exploded token stream).
 * ``translate_series`` — vectorized pandas path (``pd.Series`` map)
   used by the property test proving both paths agree, and available
   for rule classes a map literal can't express.

@@ -3,27 +3,31 @@
 The distributed twin of ``semantics.extract_doc``; pytest asserts
 span-sequence equality ``(kind, text, media_ref, order)`` per doc.
 
-Physical shape (what .explain should show, and why it scales):
+Physical shape (what .explain shows):
 
   main path   documents -> salted repartition -> LEFT JOIN the per-doc
-              OCR map (broadcast when the distinct-media set is small,
-              sort-merge + AQE skew-join otherwise) -> one codegen
-              stage: patch OCR text into the span array (element_at),
-              stage B strip (array filter), stage C translate (map
-              literal), re-offset. Span arrays never explode.
+              OCR map on doc_id (AQE broadcasts the map at runtime when
+              it is small) -> one projection: patch OCR text into the
+              span array (element_at), stage B strip (array filter),
+              stage C translate (map literal), re-offset. Span arrays
+              never explode. The projection's stage is compiled, but
+              on Spark 4.1 the higher-order functions it is built from
+              (transform, filter, array_sort, exists) are
+              CodegenFallback: each is evaluated interpreted, element
+              by element.
 
-  OCR side    documents -> project media REFS only (a few per doc) ->
-              explode -> distinct -> semi-join the media side table ->
-              sha2 dedup (+ optional cache join) -> mapInPandas OCR
-              over DISTINCT payloads (stage A) -> regroup to a per-doc
+  OCR side    documents -> explode the media REFS only (a few per doc)
+              -> one row per ref with its fresh flag (did any doc opt
+              out of the cache) -> inner join with the media table, the
+              refs as the hash-build side (media payloads only ever
+              stream) -> stage A (``stage_a_ocr.ocr_payloads``): one
+              row per sha256, one cache probe, ONE mapInPandas over all
+              distinct payloads -> explode back to refs, one value per
+              ref -> join the per-doc refs -> regroup to a per-doc
               ref->text map (tiny rows).
 
-Shuffle budget: distinct(media_ref) + the tiny per-doc map regroup +
-the explicit entry repartition. With a broadcastable OCR map the main
-path is a single narrow codegen stage after the repartition; text-only
-docs pay one broadcast-probe and nothing else. OCR cost is per
-distinct payload — document fan-in and media-heavy skew cannot
-concentrate compute (see operators/partitioning.py for salting).
+OCR cost is per distinct payload — document fan-in and media-heavy skew
+cannot concentrate compute (see operators/partitioning.py for salting).
 """
 
 from __future__ import annotations
@@ -33,9 +37,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.partitioning import media_weight, salted_repartition
-from .operators.stage_a_ocr import ocr_distinct_media
-# (strip_boilerplate stays available as a standalone operator; the
-# pipeline uses the fused token path below)
+from .operators.stage_a_ocr import computed_entries, ocr_payloads
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 OUT_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
@@ -44,13 +46,16 @@ OUT_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
 class ExtractResult(NamedTuple):
     result: DataFrame
     new_ocr_cache: DataFrame  # (h, ocr_text) — MERGE into the cache table
+    # Stage A's per-payload output, which both frames above read:
+    # persist it before writing ``result`` and the cache merge reuses
+    # the OCR pass instead of re-running it.
+    ocr_payloads: DataFrame
 
 
 def _sort_spans_by_offset(spans_col):
-    # STABLE sort on an (offset, original-index, span) key-prefix
-    # struct: natural struct ordering is codegen'd, unlike a comparator
-    # lambda which is evaluated interpreted per comparison. The index
-    # tie-break matters for parity: the golden spec uses Python's
+    # STABLE sort on an (offset, original-index, span) key struct:
+    # structs compare field by field, so the index breaks offset ties.
+    # The tie-break matters for parity: the golden spec uses Python's
     # STABLE sorted(key=offset), so two spans sharing an offset (legal
     # input even though datagen never produces it) must keep their
     # input order — a bare (offset, span) key would reorder them by
@@ -64,19 +69,6 @@ def _sort_spans_by_offset(spans_col):
     return F.transform(F.array_sort(keyed), lambda x: x["s"])
 
 
-def _reoffset(spans_col):
-    """Final re-enumeration: offset = array position 0..n-1."""
-    return F.transform(
-        spans_col,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-
-
 def extract(
     spark: SparkSession,
     docs: DataFrame,
@@ -87,29 +79,27 @@ def extract(
     cache_flag_col: str | None = None,
     num_partitions: int | None = None,
     salt_buckets: int = 8,
-    broadcast_ocr: bool = False,
     pre_partitioned: bool = False,
 ) -> ExtractResult:
     """Run the full extraction over ``docs(doc_id, spans)``.
 
     ``media(media_ref, media_bytes)`` is the side table for stage A;
     pass None for corpora with no media payloads (stage A is skipped,
-    media spans keep text=null — same as an unresolvable ref).
-    ``broadcast_ocr``: optional explicit broadcast HINT for the
-    DISTINCT-media ocr_side join. Default False — the scale-safe
-    declarative plan: AQE auto-upgrades the join to broadcast at
-    runtime when the side is genuinely small, while an explicit hint
-    on a large distinct-media set forces a single-threaded driver
-    build (a fixed serial cost that caps scaling efficiency — measured
-    ~10s at 1M distinct media). Set True only when you KNOW the
-    distinct-media set is small and want to skip AQE's first shuffle
-    pass. The per-doc resolved map is never broadcast (it scales with
-    the corpus).
+    media spans keep text=null — same as an unresolvable ref). A
+    ``media_ref`` listed more than once resolves to ONE payload: rows
+    with identical bytes are one payload, and among differing bytes the
+    payload with the smallest sha256 (hex) wins.
     ``cache_flag_col``: optional per-doc boolean column — the
     reference's per-request ``cached`` flag (controllers/pdf.js:38):
     docs with False get FRESHLY computed OCR even on a cache hit (and
-    never a possibly-stale cached value); the store stays
-    unconditional either way.
+    never a possibly-stale cached value); NULL counts as True. The
+    store stays unconditional either way.
+
+    A row whose ``spans`` is NULL passes through with ``spans`` NULL,
+    with or without media. To keep such rows (and other malformed
+    input) out of the output, split the input with
+    ``operators.quarantine.validate_documents`` first; it routes them
+    to quarantine with reason ``null_spans``.
     """
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -127,7 +117,9 @@ def extract(
 
     if media is None:
         resolved = None
-        new_cache = spark.createDataFrame([], "h string, ocr_text string")
+        new_cache = payloads = spark.createDataFrame(
+            [], "h string, ocr_text string"
+        )
     else:
         # OCR side: explode ONLY the media refs (a few per doc) from the
         # un-repartitioned input — text spans never leave their array.
@@ -147,57 +139,49 @@ def extract(
                 )
             ).alias("media_ref"),
         )
-        if cache_flag_col is None:
-            needed_refs = refs_per_doc.select("media_ref").distinct()
-            media_needed = media.join(needed_refs, "media_ref", "left_semi")
-            ocr_results, new_cache = ocr_distinct_media(
-                media_needed, ocr_cache_df=ocr_cache, use_cache=use_cache
+        # a ref needs a fresh compute if ANY doc using it opted out
+        needed_refs = refs_per_doc.groupBy("media_ref").agg(
+            F.max(~F.col("_use_cache")).alias("_fresh")
+        )
+        # The hint pins the refs as the build side. Left to AQE, the
+        # inner join broadcasts whichever side a finished stage shows
+        # small — the media payloads included.
+        media_needed = media.join(
+            needed_refs.hint("shuffle_hash"), "media_ref"
+        )
+        payloads = ocr_payloads(
+            media_needed, ocr_cache, use_cache, fresh_col="_fresh"
+        )
+        new_cache = computed_entries(payloads)
+        # one value per ref: min over (h, ...) picks the smallest sha256
+        # when a ref maps to several payloads
+        ocr_side = (
+            payloads.select(
+                F.explode("media_refs").alias("media_ref"),
+                F.struct("h", "ocr_text", "ocr_text_fresh").alias("_o"),
             )
-            ocr_side = ocr_results.select("media_ref", "ocr_text")
-            pick = F.struct(
-                "media_ref", F.col("ocr_text").alias("_text")
-            )
-        else:
-            # a ref needs a fresh compute if ANY doc using it opted out
-            needed_refs = refs_per_doc.groupBy("media_ref").agg(
-                F.max(~F.col("_use_cache")).alias("_fresh")
-            )
-            media_needed = media.join(needed_refs, "media_ref")
-            ocr_results, new_cache = ocr_distinct_media(
-                media_needed,
-                ocr_cache_df=ocr_cache,
-                use_cache=use_cache,
-                fresh_col="_fresh",
-            )
-            ocr_side = ocr_results.select(
-                "media_ref", "ocr_text", "ocr_text_fresh"
-            )
-            # per-request routing: cached=True docs take the
-            # cache-preferred value, cached=False docs the fresh one
-            pick = F.struct(
-                "media_ref",
-                F.when(F.col("_use_cache"), F.col("ocr_text"))
-                .otherwise(F.col("ocr_text_fresh"))
-                .alias("_text"),
-            )
-        if broadcast_ocr:
-            ocr_side = F.broadcast(ocr_side)
+            .groupBy("media_ref")
+            .agg(F.min("_o").alias("_o"))
+        )
+        # per-request routing: cached=True docs take the cache-preferred
+        # value, cached=False docs the fresh one
+        pick = F.struct(
+            "media_ref",
+            F.when(F.col("_use_cache"), F.col("_o.ocr_text"))
+            .otherwise(F.col("_o.ocr_text_fresh"))
+            .alias("_text"),
+        )
         # Per-doc ref->text map: tiny rows through the regroup shuffle.
-        # NEVER broadcast `resolved` — it has one row per media-bearing
-        # document, so its size scales with the CORPUS, not with the
-        # distinct-media set; a driver-side broadcast build OOMs at
-        # scale. It goes through a shuffle join; AQE still picks a
-        # broadcast join at runtime when the map is genuinely small.
+        # It has one row per media-bearing document, so it scales with
+        # the CORPUS; AQE broadcasts it only when it is genuinely small.
         resolved = (
             refs_per_doc.join(ocr_side, "media_ref", "left")
             .groupBy("doc_id")
-            .agg(
-                F.map_from_entries(F.collect_list(pick)).alias("_ocr")
-            )
+            .agg(F.map_from_entries(F.collect_list(pick)).alias("_ocr"))
         )
 
     # Explicit shuffle boundary (the reference's queue hop): balances
-    # byte-skewed inputs for the codegen stage and the output write.
+    # byte-skewed inputs for the B+C projection and the output write.
     # ``pre_partitioned``: the input is ALREADY hash-distributed on
     # doc_id (a bucketed table / Iceberg bucket partition) — skip the
     # full-corpus repartition entirely; with a bucketed source the
@@ -278,4 +262,4 @@ def extract(
         ),
     )
     result = all_docs.select("doc_id", spans_out.alias("spans"))
-    return ExtractResult(result, new_cache)
+    return ExtractResult(result, new_cache, payloads)

@@ -61,11 +61,11 @@ def stream_extract(
         if cache_cat is not None and "ocr_cache" not in kwargs:
             kwargs["ocr_cache"] = cache_cat.load_cache("ocr_cache", "h")
         res = extract(spark, batch_df, media, **kwargs)
-        new_cache = res.new_ocr_cache.persist()
+        res.ocr_payloads.persist()
         res.result.write.mode("append").parquet(output_dir)
         if cache_cat is not None and media is not None:
-            cache_cat.merge_cache(new_cache, "ocr_cache", "h")
-        new_cache.unpersist()
+            cache_cat.merge_cache(res.new_ocr_cache, "ocr_cache", "h")
+        res.ocr_payloads.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -136,3 +136,110 @@ def test_pre_partitioned_bucketed_input_equals_default(
         ).result.collect()
     }
     assert out == golden
+
+
+def _media_with_dups(spark, media, extra):
+    """The fixture media table plus ``extra`` (media_ref, bytes) rows
+    that repeat refs it already lists."""
+    rows = [(r, b, "png") for r, b in extra]
+    return media.unionByName(spark.createDataFrame(rows, media.schema))
+
+
+def _golden_by_smallest_sha(extra):
+    """Golden spans when each duplicated ref resolves to its payload
+    with the smallest sha256 — the rule extract() documents."""
+    import hashlib
+
+    docs = G.gen_documents(100)
+    rows = G.gen_media_table(G.collect_media_refs(docs))
+    by_ref = {r: [b] for r, b, _ in rows}
+    for r, b in extra:
+        by_ref[r].append(b)
+    lookup = [
+        (r, min(bs, key=lambda b: hashlib.sha256(b).hexdigest()), None)
+        for r, bs in by_ref.items()
+    ]
+    g = G.golden_extracted(docs, lookup)
+    return {
+        d: [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+        for d, spans in g.items()
+    }
+
+
+def test_duplicate_media_ref_identical_bytes(spark, fixture_dir, golden):
+    """A ref listed twice with the same bytes is one payload: the
+    output is the normal golden output (it used to abort the job with
+    DUPLICATED_MAP_KEY)."""
+    docs = load_fixture(spark, fixture_dir, "documents")
+    media = load_fixture(spark, fixture_dir, "media")
+    refs = [r["media_ref"] for r in media.orderBy("media_ref").limit(3).collect()]
+    dup_rows = [
+        (r["media_ref"], r["media_bytes"])
+        for r in media.filter(media.media_ref.isin(refs)).collect()
+    ]
+    got = _collect_spans(
+        extract(spark, docs, _media_with_dups(spark, media, dup_rows)).result
+    )
+    assert got == golden
+
+
+def test_duplicate_media_ref_differing_bytes_smallest_sha_wins(
+    spark, fixture_dir
+):
+    import hashlib
+
+    from ocr_translation_spark import semantics as S
+
+    docs = load_fixture(spark, fixture_dir, "documents")
+    media = load_fixture(spark, fixture_dir, "media")
+    orig = {
+        r["media_ref"]: r["media_bytes"]
+        for r in media.orderBy("media_ref").limit(6).collect()
+    }
+    # one extra payload per ref; the seeds are chosen so the duplicate
+    # wins for some refs and the original wins for others
+    extra, wins = [], set()
+    for i, (ref, b) in enumerate(sorted(orig.items())):
+        dup = S.encode_media([(f"dup{i}", 0, 0), ("table", 1, 0)])
+        extra.append((ref, dup))
+        if hashlib.sha256(dup).hexdigest() < hashlib.sha256(b).hexdigest():
+            wins.add(ref)
+    assert 0 < len(wins) < len(orig)
+
+    expected = _golden_by_smallest_sha(extra)
+    got = _collect_spans(
+        extract(spark, docs, _media_with_dups(spark, media, extra)).result
+    )
+    assert got == expected
+    # the rule is observable: some doc shows a winning duplicate's text
+    texts = {t for spans in got.values() for _, t, r in spans if r in wins}
+    assert any(t and t.startswith("dup") for t in texts)
+
+
+@pytest.mark.parametrize("with_media", [True, False])
+def test_null_spans_pass_through(spark, fixture_dir, golden, with_media):
+    """NULL spans pass through extract() as NULL (documented contract);
+    validate_documents is the route that quarantines them."""
+    from ocr_translation_spark.operators.quarantine import validate_documents
+
+    docs = load_fixture(spark, fixture_dir, "documents")
+    media = load_fixture(spark, fixture_dir, "media") if with_media else None
+    null_row = spark.createDataFrame([("doc_null_spans", None)], docs.schema)
+    with_null = docs.unionByName(null_row)
+
+    rows = {
+        r["doc_id"]: r["spans"]
+        for r in extract(spark, with_null, media).result.collect()
+    }
+    assert rows.pop("doc_null_spans", "missing") is None
+    assert set(rows) == set(golden)
+    if with_media:
+        assert {
+            d: [(s["kind"], s["text"], s["media_ref"]) for s in spans]
+            for d, spans in rows.items()
+        } == golden
+
+    split = validate_documents(with_null)
+    assert [
+        (r["doc_id"], r["reason"]) for r in split.quarantined.collect()
+    ] == [("doc_null_spans", "null_spans")]

@@ -8,13 +8,21 @@ measured:
 
 * extract_flagship shape — exactly ONE ``Exchange hashpartitioning``
   (the explicit salted queue-hop repartition; derive + stage B/C stay
-  one fused codegen chain) and ZERO Python-evaluation nodes
-  (media=None: stage A never runs, B+C are whole-stage codegen).
+  one fused expression chain in a single projection) and ZERO
+  Python-evaluation nodes (media=None: stage A never runs; B+C are
+  Catalyst higher-order functions, which Spark 4.1 evaluates
+  interpreted as CodegenFallback).
 * minhash_near_dup — the banded candidate path's RUNTIME stage count:
   distinct ShuffleQueryStage ids after execution (textual Exchange
   counts overcount badly here because the persisted shingle+signature
   subtree re-prints under every InMemoryRelation reference —
   tools/plan_stats.py convention).
+
+* extract with media and a ``Catalog``-loaded OCR cache — stage A is
+  one path: one ``MapInPandas``, the media table and the cache each
+  scanned once, the media payloads never broadcast, no full-outer
+  join, and a join/exchange budget below the forked branch it
+  replaced.
 
 A companion test proves the exchange gate genuinely fires on an
 injected extra ``repartition``.
@@ -29,6 +37,8 @@ from pyspark.sql import functions as F
 
 from ocr_translation_spark.derive import derive_span_documents
 from ocr_translation_spark.pipeline import extract
+from ocr_translation_spark.sources.catalog import Catalog
+from tests.conftest import load_fixture
 
 _PY_NODES = (
     "ArrowEvalPython",
@@ -79,6 +89,65 @@ def test_flagship_extra_repartition_detected(spark):
     df = _flagship(spark).repartition(4, "doc_id")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def _final_plan(df) -> str:
+    """The executed plan after AQE's last re-plan (AQE prints the
+    initial plan below it; that part is dropped)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _ancestors(plan: str, needle: str) -> list[list[str]]:
+    """For each plan line containing ``needle``: its ancestor nodes."""
+    out, stack = [], []
+    for line in plan.splitlines():
+        body = line.lstrip(" :|+-")
+        depth = len(line) - len(body)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if needle in body:
+            out.append([text for _, text in stack])
+        stack.append((depth, body))
+    return out
+
+
+_MEDIA_SCAN = "ReadSchema: struct<media_ref:string,media_bytes:binary>"
+_CACHE_SCAN = "ReadSchema: struct<h:string,ocr_text:string>"
+_JOINS = re.compile(
+    r"\b(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin"
+    r"|BroadcastNestedLoopJoin|CartesianProduct)\b"
+)
+
+
+def test_extract_media_with_cache_one_ocr_path(spark, fixture_dir, tmp_path):
+    docs = load_fixture(spark, fixture_dir, "documents")
+    media = load_fixture(spark, fixture_dir, "media")
+    computed = extract(spark, docs, media).new_ocr_cache
+    cat = Catalog(spark, str(tmp_path))
+    # two batches: load_cache resolves them through its existing-wins
+    # window, and the cache hits only part of the payloads
+    cat.merge_cache(computed.limit(40), "ocr_cache", "h")
+    cat.merge_cache(computed.limit(80), "ocr_cache", "h")
+    cache = cat.load_cache("ocr_cache", "h")
+    plan = _final_plan(extract(spark, docs, media, ocr_cache=cache).result)
+
+    assert plan.count("MapInPandas") == 1, plan
+    media_scans = _ancestors(plan, _MEDIA_SCAN)
+    assert len(media_scans) == 1, plan
+    # the payloads are never a broadcast build side: the first exchange
+    # above the media scan is a shuffle (the OCR side's small result may
+    # still be broadcast further up)
+    first_exchange = next(a for a in reversed(media_scans[0]) if "Exchange" in a)
+    assert first_exchange.startswith("Exchange hashpartitioning"), plan
+    assert len(_ancestors(plan, _CACHE_SCAN)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "FullOuter" not in plan, plan
+    # the forked branch this replaced planned 9 joins and 13 hash
+    # exchanges (ReusedExchange included) for this call on this fixture
+    assert len(_JOINS.findall(plan)) <= 4, plan
+    assert plan.count("Exchange hashpartitioning") <= 7, plan
 
 
 @pytest.fixture(scope="module")
