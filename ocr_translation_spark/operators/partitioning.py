@@ -12,8 +12,12 @@ Where salting matters at 100 TB (and where it doesn't):
 
 * Pre-explode, one doc = one row, so a hash repartition on ``doc_id``
   is already row-uniform — but NOT byte-uniform when span arrays are
-  skewed. ``salted_repartition`` with a weight column splits byte-heavy
-  keys across ``salt_buckets`` partitions.
+  skewed. A salt cannot fix that: one row cannot be split, so on
+  one-row-per-key input the salt only acts as a second hash of the key
+  and moves whole rows around. It does not even-out byte weight (on
+  the benchmark's ``media_dense`` seed 1, 300 docs over 8 partitions,
+  max/mean media weight per partition was 1.47 with the salt and 1.26
+  with the same ``xxhash64(doc_id)`` repartition without it).
 * Post-explode span streams keyed by ``doc_id`` are row-skewed; the
   same salt applies (grouping back per-doc happens only in the final
   collect, where groups are doc-sized and bounded).

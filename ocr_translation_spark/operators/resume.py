@@ -21,29 +21,47 @@ Protocol (SURVEY.md section 4.2):
   lineage — the batch replacement for the reference's SSE progress
   stream (``controllers/pdf.js:30-47``).
 
-At 100 TB: n_buckets scales to O(1000); each bucket is a full
-distributed job over ~1/n_buckets of the corpus, so the driver loop is
-cheap relative to the work, and a preempted cluster loses at most one
-bucket of progress.
+At 100 TB n_buckets scales to O(1000) and a preempted cluster loses
+at most the buckets in flight. Each bucket is a full distributed job,
+but NOT one over ~1/n_buckets of the corpus: ``_work_bucket`` filters
+the full input on the bucket expression and nothing prunes that
+filter, so every bucket reads and hashes the whole corpus (a run reads
+it n_buckets times).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline import extract
 
-LINEAGE_SCHEMA = (
-    "run_id string, bucket int, n_docs long, n_spans long, "
-    "wall_ms long, status string, committed_at string"
-)
-METRICS_SCHEMA = (
-    "run_id string, bucket int, stage string, metric string, value double"
-)
+# The state tables under ``state_dir``. Appends are 1-3 rows, so they
+# are written (and lineage is read) directly with pyarrow: one file
+# create, ~ms, instead of a Spark job with seconds of driver and
+# scheduler overhead per bucket.
+STATE_SCHEMAS = {
+    "lineage": pa.schema([
+        ("run_id", pa.string()), ("bucket", pa.int32()),
+        ("n_docs", pa.int64()), ("n_spans", pa.int64()),
+        ("wall_ms", pa.int64()), ("status", pa.string()),
+        ("committed_at", pa.string()),
+    ]),
+    "metrics": pa.schema([
+        ("run_id", pa.string()), ("bucket", pa.int32()),
+        ("stage", pa.string()), ("metric", pa.string()),
+        ("value", pa.float64()),
+    ]),
+}
 
 
 def _bucket_col(n_buckets: int):
@@ -51,7 +69,8 @@ def _bucket_col(n_buckets: int):
 
 
 def committed_buckets(spark: SparkSession, state_dir: str) -> set[int]:
-    """Buckets with a committed lineage row.
+    """Buckets with a committed lineage row (read with pyarrow; no
+    Spark job, ``spark`` is unused).
 
     MISSING lineage (fresh run) reads as the empty set; a BROKEN
     lineage dir raises — a resume protocol that silently reads
@@ -61,14 +80,13 @@ def committed_buckets(spark: SparkSession, state_dir: str) -> set[int]:
     lineage_path = os.path.join(state_dir, "lineage")
     if not os.path.exists(lineage_path):
         return set()
-    rows = (
-        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-        .filter(F.col("status") == "committed")
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    return {r["bucket"] for r in rows}
+    tbl = pq.read_table(
+        lineage_path, schema=STATE_SCHEMAS["lineage"],
+        columns=["bucket", "status"],
+    ).to_pydict()
+    return {
+        b for b, st in zip(tbl["bucket"], tbl["status"]) if st == "committed"
+    }
 
 
 class ResumableRun:
@@ -100,39 +118,19 @@ class ResumableRun:
         else:
             self.cache_catalog = None
 
-    # arrow types matching the LINEAGE/METRICS schema strings above —
-    # state appends are 1-3 rows, so they are written directly with
-    # pyarrow (one file create, ~ms) instead of a full Spark job
-    # (createDataFrame + write = seconds of driver/scheduler overhead
-    # per bucket, the dominant serialized cost of the commit loop)
-    _STATE_ARROW = {
-        "lineage": [
-            ("run_id", "string"), ("bucket", "int32"), ("n_docs", "int64"),
-            ("n_spans", "int64"), ("wall_ms", "int64"), ("status", "string"),
-            ("committed_at", "string"),
-        ],
-        "metrics": [
-            ("run_id", "string"), ("bucket", "int32"), ("stage", "string"),
-            ("metric", "string"), ("value", "float64"),
-        ],
-    }
-
-    def _append_state(self, name: str, rows, schema: str):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        fields = self._STATE_ARROW[name]
-        tbl = pa.table(
-            {
-                fname: pa.array([r[i] for r in rows], pa.type_for_alias(ftype))
-                for i, (fname, ftype) in enumerate(fields)
-            }
+    def _append_state(self, name: str, rows) -> None:
+        schema = STATE_SCHEMAS[name]
+        tbl = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
         )
         d = os.path.join(self.state_dir, name)
         os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            tbl, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
-        )
+        # write under a hidden name, then rename: a crash mid-write
+        # leaves a file both pyarrow and Spark skip, never a truncated
+        # part that makes the lineage unreadable
+        part = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(tbl, os.path.join(d, "." + part))
+        os.replace(os.path.join(d, "." + part), os.path.join(d, part))
 
     def _work_bucket(self, bucketed, media, b: int, kwargs: dict):
         """The heavy, parallel-safe part of one bucket: extract + data
@@ -204,9 +202,8 @@ class ResumableRun:
             os.replace(tmp, pf)
 
     def _commit_bucket(self, b: int, stats, wall_ms: int) -> None:
-        """The bucket's commit point: ONE lineage append (serialized by
-        the caller — concurrent Spark append jobs into the same dir
-        share a _temporary staging dir and would trample each other)."""
+        """The bucket's commit point: ONE lineage append (the caller
+        holds the commit lock), then its metrics rows."""
         now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         self._append_state(
             "lineage",
@@ -216,7 +213,6 @@ class ResumableRun:
                     wall_ms, "committed", now,
                 )
             ],
-            LINEAGE_SCHEMA,
         )
         self._append_state(
             "metrics",
@@ -225,7 +221,6 @@ class ResumableRun:
                 (self.run_id, b, "extract", "spans", float(stats["n_spans"])),
                 (self.run_id, b, "extract", "wall_ms", float(wall_ms)),
             ],
-            METRICS_SCHEMA,
         )
 
     def run(
@@ -239,23 +234,37 @@ class ResumableRun:
     ) -> list[int]:
         """Process all pending buckets; returns the buckets processed.
 
-        ``max_concurrency`` > 1 submits that many buckets' Spark jobs
-        concurrently from a thread pool: at n_buckets ~ O(1000) the
-        per-bucket driver overhead (planning, the lineage append, the
-        cache merge) otherwise serializes into idle-cluster time. The
-        data write stays per-bucket-isolated (each bucket owns its
-        partition dir); the lineage append — the commit point — and the
-        cache merge are serialized under a lock, so commit semantics
-        (idempotent retry at bucket granularity) are identical to the
-        sequential path.
+        One loop at every concurrency: a pool of
+        ``max(1, max_concurrency)`` threads takes the pending buckets in
+        order, so a pool of one runs them one after another. Several
+        threads overlap the buckets' Spark jobs: at n_buckets ~ O(1000)
+        the per-bucket driver overhead (planning, the lineage append,
+        the cache merge) otherwise serializes into idle-cluster time.
+        Pool threads inherit the caller's local properties (job group,
+        scheduler pool).
 
-        ``fail_after_buckets`` simulates a mid-run crash (tests); it
-        forces the sequential path so "crash after N commits" remains
-        well-defined.
+        * Commit: each bucket writes its own partition dir outside the
+          lock; the lineage append (the commit point), the cache merge
+          and the cache reload run under one commit lock.
+        * Stop: the first bucket that raises sets a stop flag. A bucket
+          that has not started checks it first and never starts;
+          buckets already running finish and commit; then the error
+          propagates. A resume redoes only the uncommitted buckets.
+        * Compaction: every bucket reads a snapshot of the cache taken
+          when it starts, and compaction replaces the files a snapshot
+          reads. So the merge compacts (every ``Catalog.COMPACT_AFTER``
+          batches) only when no other bucket holds a snapshot — with a
+          pool of one, at every merge that reaches the limit.
+
+        ``fail_after_buckets=N`` simulates a crash (tests, benchmark):
+        the first N pending buckets run at the given concurrency, then
+        the run raises ``RuntimeError("simulated crash before bucket
+        …")``.
         """
         self._check_protocol()
         done = committed_buckets(self.spark, self.state_dir)
         pending = [b for b in range(self.n_buckets) if b not in done]
+        todo = pending[:fail_after_buckets]  # [:None] is all of them
         bucketed = docs.withColumn("_bucket", _bucket_col(self.n_buckets))
 
         if self.cache_catalog is not None:
@@ -270,82 +279,62 @@ class ResumableRun:
             extract_kwargs["ocr_cache"] = self.cache_catalog.load_cache(
                 "ocr_cache", "h"
             )
+        merge = self.cache_catalog is not None and media is not None
 
-        processed: list[int] = []
-        if fail_after_buckets is not None or max_concurrency <= 1:
-            for i, b in enumerate(pending):
-                if fail_after_buckets is not None and i >= fail_after_buckets:
-                    raise RuntimeError(f"simulated crash before bucket {b}")
+        lock = threading.Lock()
+        readers = 0  # started buckets holding a cache snapshot
+        stop = False
+
+        def one_bucket(b: int) -> int | None:
+            nonlocal readers, stop
+            with lock:
+                if stop:
+                    return None
+                readers += 1
+                kwargs = dict(extract_kwargs)
+            try:
                 stats, res, wall_ms = self._work_bucket(
-                    bucketed, media, b, extract_kwargs
+                    bucketed, media, b, kwargs
                 )
                 try:
-                    self._commit_bucket(b, stats, wall_ms)
-                    if self.cache_catalog is not None and media is not None:
-                        # store-always (OCRQueue.js:85): grow the persisted
-                        # cache; later buckets hit instead of re-OCRing.
-                        self.cache_catalog.merge_cache(
-                            res.new_ocr_cache, "ocr_cache", "h"
-                        )
-                        extract_kwargs["ocr_cache"] = (
-                            self.cache_catalog.load_cache("ocr_cache", "h")
-                        )
+                    with lock:
+                        self._commit_bucket(b, stats, wall_ms)
+                        if merge:
+                            # store-always (OCRQueue.js:85): grow the
+                            # persisted cache; later buckets hit
+                            # instead of re-OCRing. Compact only if no
+                            # other bucket reads a snapshot.
+                            self.cache_catalog.merge_cache(
+                                res.new_ocr_cache, "ocr_cache", "h",
+                                compact_after=(
+                                    None if readers == 1 else sys.maxsize
+                                ),
+                            )
+                            extract_kwargs["ocr_cache"] = (
+                                self.cache_catalog.load_cache(
+                                    "ocr_cache", "h"
+                                )
+                            )
                 finally:
-                    # a failed commit must not leak the bucket's persisted
-                    # OCR blocks for the session lifetime
+                    # a failed commit must not leak the bucket's
+                    # persisted OCR blocks for the session lifetime
                     res.ocr_payloads.unpersist()
-                processed.append(b)
-            return processed
-
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        commit_lock = threading.Lock()
-        shared = dict(extract_kwargs)
-
-        def _one(b: int) -> int:
-            # FAIR pool per slot when the scheduler is FAIR-configured;
-            # under FIFO concurrent jobs still interleave by task slots
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"resume-{b % max_concurrency}"
-            )
-            with commit_lock:
-                kwargs = dict(shared)
-            stats, res, wall_ms = self._work_bucket(
-                bucketed, media, b, kwargs
-            )
-            try:
-                with commit_lock:
-                    self._commit_bucket(b, stats, wall_ms)
-                    if self.cache_catalog is not None and media is not None:
-                        self.cache_catalog.merge_cache(
-                            res.new_ocr_cache, "ocr_cache", "h"
-                        )
-                        shared["ocr_cache"] = self.cache_catalog.load_cache(
-                            "ocr_cache", "h"
-                        )
+            except BaseException:
+                with lock:
+                    stop = True
+                raise
             finally:
-                res.ocr_payloads.unpersist()
+                with lock:
+                    readers -= 1
             return b
 
-        # Auto-compaction renames + deletes the live cache dir; threads
-        # outside the commit lock hold lazy DataFrames over those files
-        # mid-extract and would crash with FileNotFoundException. Defer
-        # compaction to the quiesced point after the pool drains.
-        if self.cache_catalog is not None:
-            self.cache_catalog.auto_compact = False
-        try:
-            with ThreadPoolExecutor(max_workers=max_concurrency) as ex:
-                processed = list(ex.map(_one, pending))
-        finally:
-            if self.cache_catalog is not None:
-                self.cache_catalog.auto_compact = True
-        if self.cache_catalog is not None and media is not None:
-            from ..sources.catalog import Catalog as _Cat
-
-            path = os.path.join(self.cache_catalog.root, "ocr_cache")
-            if len(_Cat._batch_ids(path)) >= _Cat.COMPACT_AFTER:
-                self.cache_catalog.compact_cache("ocr_cache", "h")
+        target = inheritable_thread_target(self.spark)(one_bucket)
+        with ThreadPoolExecutor(max_workers=max(1, max_concurrency)) as pool:
+            processed = list(pool.map(target, todo))
+        if len(todo) < len(pending):
+            raise RuntimeError(
+                f"simulated crash before bucket {pending[len(todo)]}"
+            )
         return processed
 
     def read_output(self) -> DataFrame:
@@ -380,11 +369,7 @@ class ResumableRun:
         return ("completed", rows[0]["spans"])
 
     def read_lineage(self) -> DataFrame:
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
-            os.path.join(self.state_dir, "lineage")
-        )
+        return self.spark.read.parquet(os.path.join(self.state_dir, "lineage"))
 
     def read_metrics(self) -> DataFrame:
-        return self.spark.read.schema(METRICS_SCHEMA).parquet(
-            os.path.join(self.state_dir, "metrics")
-        )
+        return self.spark.read.parquet(os.path.join(self.state_dir, "metrics"))

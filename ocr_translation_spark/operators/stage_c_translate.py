@@ -32,12 +32,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import semantics as S
 
-def _dict_map() -> Column:
-    # built lazily: Column literals need an active SparkContext
-    return F.create_map(
-        *[F.lit(x) for x in itertools.chain.from_iterable(S.XLATE_DICT.items())]
-    )
-
 
 def _dict_map_two_level() -> Column:
     """map<first_char, map<word, translation>> — GetMapValue on a map
@@ -82,16 +76,9 @@ def translate_text_col(text: Column) -> Column:
     spec (blank text -> empty token list -> "")."""
     from .stage_b_boiler import py_tokens_strict
 
-    dict_map = _dict_map_two_level()
-    toks = py_tokens_strict(text)
-
-    def xlate(t):
-        low = F.lower(t)
-        inner = F.element_at(dict_map, F.substring(low, 1, 1))
-        return F.coalesce(F.element_at(inner, low), t)
-
-    translated = F.transform(toks, xlate)
-    return F.when(text.isNull(), None).otherwise(F.array_join(translated, " "))
+    return F.when(text.isNull(), None).otherwise(
+        translate_tokens(py_tokens_strict(text))
+    )
 
 
 def translate_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:

@@ -5,16 +5,24 @@ span-sequence equality ``(kind, text, media_ref, order)`` per doc.
 
 Physical shape (what .explain shows):
 
-  main path   documents -> salted repartition -> LEFT JOIN the per-doc
-              OCR map on doc_id (AQE broadcasts the map at runtime when
-              it is small) -> one projection: patch OCR text into the
-              span array (element_at), stage B strip (array filter),
-              stage C translate (map literal), re-offset. Span arrays
-              never explode. The projection's stage is compiled, but
-              on Spark 4.1 the higher-order functions it is built from
+  main path   documents -> offset sort -> salted repartition (the
+              entry hop) -> LEFT JOIN the per-doc OCR map on doc_id ->
+              one projection: patch OCR text into the span array
+              (element_at), stage B strip (array filter), stage C
+              translate (map literal), re-offset. Span arrays never
+              explode. The projection's stage is compiled, but on
+              Spark 4.1 the higher-order functions it is built from
               (transform, filter, array_sort, exists) are
               CodegenFallback: each is evaluated interpreted, element
               by element.
+
+              AQE broadcasts the OCR map at runtime when it is small.
+              When it is too large to broadcast, the join plans an
+              ``Exchange hashpartitioning(doc_id)`` on top of the
+              salted exchange, so the corpus is shuffled TWICE.
+              The entry hop hashes (doc_id, salt); with one row per doc
+              the salt cannot split a heavy doc, it only re-hashes it
+              (see operators/partitioning.py).
 
   OCR side    documents -> explode the media REFS only (a few per doc)
               -> one row per ref with its fresh flag (did any doc opt
@@ -26,8 +34,8 @@ Physical shape (what .explain shows):
               ref -> join the per-doc refs -> regroup to a per-doc
               ref->text map (tiny rows).
 
-OCR cost is per distinct payload — document fan-in and media-heavy skew
-cannot concentrate compute (see operators/partitioning.py for salting).
+OCR cost is per distinct payload, so document fan-in cannot
+concentrate OCR compute.
 """
 
 from __future__ import annotations
@@ -104,16 +112,6 @@ def extract(
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    flag = (
-        F.coalesce(F.col(cache_flag_col), F.lit(True))
-        if cache_flag_col is not None
-        else F.lit(True)
-    )
-    docs = docs.select(
-        "doc_id",
-        _sort_spans_by_offset(F.col("spans")).alias("spans"),
-        flag.alias("_use_cache"),
-    )
 
     if media is None:
         resolved = None
@@ -123,9 +121,18 @@ def extract(
     else:
         # OCR side: explode ONLY the media refs (a few per doc) from the
         # un-repartitioned input — text spans never leave their array.
+        # The refs come from the UNSORTED spans: their order never
+        # matters (array_distinct, then a per-doc map), and the offset
+        # sort is a CodegenFallback that would otherwise run again under
+        # each of the OCR side's two document scans.
+        flag = (
+            F.coalesce(F.col(cache_flag_col), F.lit(True))
+            if cache_flag_col is not None
+            else F.lit(True)
+        )
         refs_per_doc = docs.select(
             "doc_id",
-            "_use_cache",
+            flag.alias("_use_cache"),
             F.explode(
                 F.array_distinct(
                     F.transform(
@@ -180,18 +187,20 @@ def extract(
             .agg(F.map_from_entries(F.collect_list(pick)).alias("_ocr"))
         )
 
-    # Explicit shuffle boundary (the reference's queue hop): balances
-    # byte-skewed inputs for the B+C projection and the output write.
+    # Explicit shuffle boundary (the reference's queue hop) for the B+C
+    # projection and the output write. It spreads docs evenly by count,
+    # not by bytes: the salt cannot split a one-row doc (see header).
     # ``pre_partitioned``: the input is ALREADY hash-distributed on
     # doc_id (a bucketed table / Iceberg bucket partition) — skip the
     # full-corpus repartition entirely; with a bucketed source the
     # per-doc OCR-map join needs no shuffle and no sort on the big
     # side, which is the layout a 100 TB deployment would use.
-    if pre_partitioned:
-        main = docs.select("doc_id", "spans")
-    else:
+    main = docs.select(
+        "doc_id", _sort_spans_by_offset(F.col("spans")).alias("spans")
+    )
+    if not pre_partitioned:
         main = salted_repartition(
-            docs.withColumn("_w", media_weight("spans")),
+            main.withColumn("_w", media_weight("spans")),
             num_partitions,
             key_col="doc_id",
             weight_col="_w",

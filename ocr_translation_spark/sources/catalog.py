@@ -37,13 +37,6 @@ class Catalog:
         self.spark = spark
         self.root = root
         self.use_iceberg = False  # no connector in this environment
-        # Auto-compaction rewrites (rename + rmtree) the live cache dir;
-        # a concurrent reader holding a lazy DataFrame over the old
-        # files would hit FileNotFoundException mid-job. Drivers that
-        # overlap readers with merges (ResumableRun max_concurrency>1)
-        # turn this off for the duration and compact once at a quiesced
-        # point (run end) instead.
-        self.auto_compact = True
 
     def _path(self, name: str) -> str:
         p = os.path.join(self.root, f"{name}.parquet")
@@ -216,6 +209,11 @@ class Catalog:
         priorities (reference parity: cache errors degrade to
         recompute, ``TranslationQueue.js:58-83``).
 
+        ``compact_after``: compact once the table holds this many
+        batches (default ``COMPACT_AFTER``). Compaction replaces the
+        files that DataFrames loaded earlier still read; a caller with
+        such readers in flight passes a larger value to defer it.
+
         ``partition_by``: sub-partition each batch dir by these columns
         (``batch=K/p=V/...``). A reader that filters on them
         (``load_cache(where=...)``) then touches only the matching
@@ -267,7 +265,7 @@ class Catalog:
         seq = batches[-1] + 1
         _write(df, os.path.join(path, f"batch={seq}"))
         limit = self.COMPACT_AFTER if compact_after is None else compact_after
-        if self.auto_compact and len(batches) + 1 >= limit:
+        if len(batches) + 1 >= limit:
             self.compact_cache(name, key, partition_by=partition_by)
 
     def load_cache(

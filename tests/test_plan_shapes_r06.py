@@ -21,7 +21,8 @@ measured:
 * extract with media and a ``Catalog``-loaded OCR cache — stage A is
   one path: one ``MapInPandas``, the media table and the cache each
   scanned once, the media payloads never broadcast, no full-outer
-  join, and a join/exchange budget below the forked branch it
+  join, the offset sort (``array_sort``, a CodegenFallback) evaluated
+  once, and a join/exchange budget below the forked branch it
   replaced.
 
 A companion test proves the exchange gate genuinely fires on an
@@ -144,6 +145,10 @@ def test_extract_media_with_cache_one_ocr_path(spark, fixture_dir, tmp_path):
     assert len(_ancestors(plan, _CACHE_SCAN)) == 1, plan
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
     assert "FullOuter" not in plan, plan
+    # the main path sorts spans once; the OCR side takes its refs from
+    # the unsorted input (it sorted under each of its two document
+    # scans too, three sorts in all)
+    assert plan.count("array_sort(") == 1, plan
     # the forked branch this replaced planned 9 joins and 13 hash
     # exchanges (ReusedExchange included) for this call on this fixture
     assert len(_JOINS.findall(plan)) <= 4, plan

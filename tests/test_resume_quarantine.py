@@ -161,9 +161,13 @@ def test_concurrent_buckets_equal_sequential(spark, fixture_dir, tmp_path):
     assert cache.count() == cache.select("h").distinct().count()
 
 
-def test_concurrent_resume_after_crash(spark, fixture_dir, tmp_path):
-    """A sequential partial run (simulated crash) resumes CONCURRENTLY
-    and completes exactly the remaining buckets."""
+@pytest.mark.parametrize("crash_concurrency", [1, 3])
+def test_concurrent_resume_after_crash(
+    spark, fixture_dir, tmp_path, crash_concurrency
+):
+    """A partial run (simulated crash, sequential or concurrent)
+    commits exactly the buckets it was allowed, then resumes
+    CONCURRENTLY and completes exactly the remaining buckets."""
     docs = load_fixture(spark, fixture_dir, "documents")
     media = load_fixture(spark, fixture_dir, "media")
     single = _spans_map(extract(spark, docs, media).result)
@@ -172,12 +176,63 @@ def test_concurrent_resume_after_crash(spark, fixture_dir, tmp_path):
     state = str(tmp_path / "state")
     run1 = ResumableRun(spark, out, state, n_buckets=6)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run1.run(docs, media, fail_after_buckets=3)
+        run1.run(
+            docs, media, fail_after_buckets=3,
+            max_concurrency=crash_concurrency,
+        )
+    assert len(run1.read_lineage().collect()) == 3
 
     run2 = ResumableRun(spark, out, state, n_buckets=6)
     processed = run2.run(docs, media, max_concurrency=3)
     assert len(processed) == 3
     assert _spans_map(run2.read_output()) == single
+
+
+@pytest.mark.parametrize("max_concurrency", [1, 2])
+def test_failing_bucket_stops_the_run(
+    spark, fixture_dir, tmp_path, max_concurrency
+):
+    """The first failing bucket stops the run at any concurrency: the
+    error propagates, no bucket starts after the failure (buckets
+    already running finish and commit), and a resume completes the
+    rest with the single-run output."""
+    import threading
+
+    docs = load_fixture(spark, fixture_dir, "documents")
+    media = load_fixture(spark, fixture_dir, "media")
+    single = _spans_map(extract(spark, docs, media).result)
+
+    out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
+    run1 = ResumableRun(spark, out, state, n_buckets=6)
+    orig = run1._work_bucket
+    lock = threading.Lock()
+    entered = []  # bucket per _work_bucket call, in call order
+
+    def second_call_fails(bucketed, media_, b, kwargs):
+        with lock:
+            entered.append(b)
+            fail = len(entered) == 2
+        if fail:
+            raise RuntimeError(f"injected failure in bucket {b}")
+        return orig(bucketed, media_, b, kwargs)
+
+    run1._work_bucket = second_call_fails
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run1.run(docs, media, max_concurrency=max_concurrency)
+
+    # the first call takes seconds and the second fails at once, so a
+    # third call could only come from a bucket started after the failure
+    assert len(entered) == 2, entered
+    committed = [r["bucket"] for r in run1.read_lineage().collect()]
+    assert committed == [entered[0]]
+
+    run2 = ResumableRun(spark, out, state, n_buckets=6)
+    processed = run2.run(docs, media, max_concurrency=max_concurrency)
+    assert sorted(processed + committed) == list(range(6))
+    assert _spans_map(run2.read_output()) == single
+    lineage = [r["bucket"] for r in run2.read_lineage().collect()]
+    assert sorted(lineage) == list(range(6))  # each bucket exactly once
 
 
 def test_driver_loop_overhead_is_small_and_overlappable(
@@ -214,7 +269,6 @@ def test_driver_loop_overhead_is_small_and_overlappable(
     run0._append_state(
         "lineage",
         [(run0.run_id, 99, 1, 1, 1, "committed", "2026-01-01T00:00:00Z")],
-        "",
     )
     assert _t.monotonic() - t0 < 0.25
 
@@ -251,3 +305,86 @@ def test_driver_loop_overhead_is_small_and_overlappable(
     assert max_inflight >= 3, f"no real overlap: {max_inflight}"
     # sanity: concurrency is not a regression beyond host noise
     assert conc <= seq * 2, f"sequential {seq:.1f}s vs concurrent {conc:.1f}s"
+
+
+@pytest.mark.parametrize("fail_bucket", [None, 20])
+def test_bucket_loop_stress(spark, tmp_path, fail_bucket):
+    """The loop's shared state under more threads than cores and a
+    tiny switch interval, with Spark work faked out: every bucket that
+    finishes its work commits exactly once, a failure ends the run
+    early, and the cache is compacted only at a merge where no other
+    bucket is still between its work and its merge. (The exact "no
+    start after the failure" rule is pinned by
+    test_failing_bucket_stops_the_run, where buckets take seconds; with
+    1 ms fake buckets a thread may pass the stop check in the moment
+    between the raise and the flag being set.)"""
+    import sys
+    import threading
+    import time as _t
+    from types import SimpleNamespace
+
+    run = ResumableRun(
+        spark, str(tmp_path / "o"), str(tmp_path / "s"), n_buckets=64
+    )
+    lock = threading.Lock()
+    active: set[int] = set()  # entered work, not yet merged
+    entered: list[int] = []
+    merges: list[tuple[int, bool]] = []  # (bucket, compaction allowed)
+
+    def fake_work(bucketed, media_, b, kwargs):
+        with lock:
+            active.add(b)
+            entered.append(b)
+        _t.sleep(0.001 * (b % 5))
+        if b == fail_bucket:
+            with lock:
+                active.discard(b)
+            raise RuntimeError(f"injected failure in bucket {b}")
+        res = SimpleNamespace(
+            new_ocr_cache=b,
+            ocr_payloads=SimpleNamespace(unpersist=lambda: None),
+        )
+        return {"n_docs": 1, "n_spans": 2}, res, 1
+
+    def fake_merge(df, name, key, compact_after=None):
+        with lock:
+            allowed = compact_after is None
+            merges.append((df, allowed))
+            assert not allowed or active == {df}, (df, active)
+            active.discard(df)
+
+    run._work_bucket = fake_work
+    run.cache_catalog = SimpleNamespace(
+        merge_cache=fake_merge, load_cache=lambda name, key: None
+    )
+    docs = spark.range(0).selectExpr("cast(id as string) as doc_id")
+    errors = []
+
+    def drive():
+        try:
+            run.run(docs, object(), max_concurrency=16)
+        except RuntimeError as exc:
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        t = threading.Thread(target=drive)
+        t.start()
+        t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not t.is_alive()
+
+    committed = [r["bucket"] for r in run.read_lineage().collect()]
+    assert sorted(committed) == sorted(b for b, _ in merges)
+    assert len(set(committed)) == len(committed)
+    assert any(allowed for _, allowed in merges)
+    if fail_bucket is None:
+        assert not errors and sorted(committed) == list(range(64))
+    else:
+        assert "injected failure" in str(errors[0])
+        assert len(entered) < 64
+        assert sorted(committed) == sorted(
+            b for b in entered if b != fail_bucket
+        )
