@@ -1,4 +1,4 @@
-"""Stage B — boilerplate / markup strip, fully columnar (no Python).
+"""Stage B — boilerplate / markup strip, as Arrow compute over flat spans.
 
 Reference parity: the validation guards at ``src/utils/pdf.js:14-22``
 (empty-text rejection) generalized to DOM/boilerplate heuristics:
@@ -7,75 +7,80 @@ dropped, and ``text`` spans are scored by boilerplate-token density
 (kin of tag-density / text-to-markup-ratio scoring) and dropped above
 ``semantics.BOILER_THRESHOLD``.
 
-This stage is pure Catalyst expression work over the span array —
-``F.filter`` with a lambda — so it costs zero shuffles and never
-crosses the Python boundary. On Spark 4.1 ``filter`` is
-CodegenFallback: its lambda is evaluated interpreted, element by
-element, inside the compiled stage.
+``tokenize`` and ``keep_mask`` work on one Arrow batch's spans
+flattened into plain columns (one entry per span), with
+``pyarrow.compute`` kernels and numpy — no per-span Python.
+``pipeline.extract`` calls them inside its one ``mapInArrow``;
+``strip_boilerplate`` wraps them in a ``mapInArrow`` of its own.
 Exactly the semantics of ``semantics.keep_span`` (the golden spec).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 
 from .. import semantics as S
+from .span_arrow import map_spans
 
-_BOILER_TOKENS = list(S.BOILER_TOKEN_SET)
-_DROP_KINDS = [S.KIND_BOILER, S.KIND_TAG_OPEN, S.KIND_TAG_CLOSE]
-
-# Python str.strip()/str.split() whitespace parity. F.trim strips ONLY
-# ASCII spaces and Java's \\s is the ASCII subset [ \\t\\n\\x0B\\f\\r] - a
-# tab-only span would survive the Spark strip while the golden spec
-# (semantics.keep_span: text.strip()) drops it, and a leading tab would
-# inject an empty first token, diluting the boiler score (2/4 kept vs
-# the golden 2/3 dropped). PY_WS_CLASS is a Java-regex class of the
-# EXACT enumeration of Python's 29 isspace() code points (asserted in
-# tests); splitting on it and dropping empty pieces IS str.split().
-# (A translate()-based char remap and a regexp_replace strip were both
-# benchmarked for this per-span hot path: the plain class split ties
-# the old ASCII trim+\\s+ shape; the others cost 20-100% more.)
-PY_WS_CLASS = (
-    "[ \\t\\n\\x0b\\f\\r\\x1c-\\x1f\\x85\\xa0\\u1680\\u2000-\\u200a"
-    "\\u2028\\u2029\\u202f\\u205f\\u3000]"
-)
+_BOILER_TOKENS = pa.array(sorted(S.BOILER_TOKEN_SET))
+_DROP_KINDS = pa.array([S.KIND_BOILER, S.KIND_TAG_OPEN, S.KIND_TAG_CLOSE])
 
 
-def py_tokens_strict(text: Column) -> Column:
-    """Columnar twin of Python ``str.split()``: split on every Python
-    whitespace char and drop empty pieces. Blank text yields the EMPTY
-    array (unlike a trim+split shape, which yields [""]), so blank-ness
-    is ``size == 0`` and the token array answers every downstream
-    question - the fused pipeline materializes it once per span."""
-    return F.filter(F.split(text, PY_WS_CLASS), lambda t: t != "")
+class Tokens(NamedTuple):
+    """``str.split()`` of every span's text, flattened in span order."""
+
+    words: pa.Array  # the tokens
+    lower: pa.Array  # the tokens lowered like ``str.lower()``
+    span: np.ndarray  # index of the span each token belongs to
+    count: np.ndarray  # tokens per span (0 for NULL or blank text)
 
 
-def keep_from_tokens(kind: Column, text: Column, toks: Column) -> Column:
-    """``semantics.keep_span`` over a pre-tokenized span. ``toks`` must
-    be ``py_tokens_strict(text)``; size 0 == blank. The score division
-    is guarded (ANSI: it must not evaluate for empty token lists)."""
-    n = F.size(toks)
-    hits = F.size(
-        F.filter(toks, lambda t: F.lower(t).isin(_BOILER_TOKENS))
+def tokenize(text: pa.Array) -> Tokens:
+    """``str.split()`` + ``str.lower()`` over a string array.
+
+    ``utf8_split_whitespace`` splits on exactly Python's 29 whitespace
+    code points, but returns ``''`` pieces for leading, trailing and
+    repeated whitespace, so those are dropped. ``utf8_lower`` lowers
+    U+0130 (İ) to ``i`` where Python gives ``i̇`` (which would make
+    ``İs`` hit the key ``is``), so U+0130 is expanded first.
+    """
+    pieces = pc.utf8_split_whitespace(text)
+    words = pieces.flatten()
+    nonempty = pc.not_equal(words, "")
+    words = words.filter(nonempty)
+    span = pc.list_parent_indices(pieces).filter(nonempty).to_numpy()
+    lower = pc.utf8_lower(pc.replace_substring(words, "\u0130", "i\u0307"))
+    return Tokens(words, lower, span, np.bincount(span, minlength=len(text)))
+
+
+def keep_mask(kind: pa.Array, text: pa.Array, toks: Tokens) -> np.ndarray:
+    """``semantics.keep_span`` per span; ``toks`` is ``tokenize(text)``.
+    A NULL kind is not in the drop set and is not ``text``: kept."""
+    boiler = pc.is_in(toks.lower, value_set=_BOILER_TOKENS).to_numpy(
+        zero_copy_only=False
     )
-    bad_text = (kind == S.KIND_TEXT) & (
-        text.isNull()
-        | (n == 0)
-        | F.when(n > 0, (hits / n) > F.lit(S.BOILER_THRESHOLD)).otherwise(
-            F.lit(False)
-        )
+    hits = np.bincount(toks.span[boiler], minlength=len(kind))
+    n = toks.count
+    score = np.divide(hits, n, out=np.zeros(len(n)), where=n > 0)
+    is_text = pc.fill_null(pc.equal(kind, S.KIND_TEXT), False).to_numpy(
+        zero_copy_only=False
     )
-    return ~kind.isin(_DROP_KINDS) & ~bad_text
-
-
-def keep_span_predicate(span: Column) -> Column:
-    """Columnar twin of ``semantics.keep_span`` (span = struct column)."""
-    kind, text = span["kind"], span["text"]
-    return keep_from_tokens(kind, text, py_tokens_strict(span["text"]))
+    bad_text = is_text & ((n == 0) | (score > S.BOILER_THRESHOLD))
+    dropped = pc.is_in(kind, value_set=_DROP_KINDS).to_numpy(zero_copy_only=False)
+    return ~dropped & ~bad_text
 
 
 def strip_boilerplate(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Filter each row's span array down to content spans (stage B)."""
-    return df.withColumn(
-        spans_col, F.filter(F.col(spans_col), keep_span_predicate)
-    )
+    """Filter each row's span array down to content spans (stage B);
+    the kept spans keep their offsets, other columns pass through."""
+
+    def strip(spans: pa.StructArray):
+        text = spans.field("text")
+        return spans, keep_mask(spans.field("kind"), text, tokenize(text))
+
+    return map_spans(df, spans_col, strip)

@@ -1,112 +1,59 @@
-"""Stage C — dictionary + rule translation (en->vi), columnar by default.
+"""Stage C — dictionary + rule translation (en->vi), as Arrow compute.
 
 Reference parity: ``src/utils/translator.js:8-23`` (the Google-translate
 HTTP call) replaced by a deterministic token-wise dictionary with
 identity fallback (FIXTURES.md section 3), plus the text-hash cache at
 ``src/utils/MessageQueue/TranslationQueue.js:53-83`` — which becomes
-unnecessary as a TABLE here because the dictionary lookup is a pure
-in-plan map literal (the cache would cost a shuffle to save a hash
-lookup; see dedup_cache.py for the generic cached-compute operator used
-where compute IS expensive).
+unnecessary as a TABLE here because the dictionary lookup is a hash
+probe inside the batch (the cache would cost a shuffle to save it; see
+dedup_cache.py for the generic cached-compute operator used where
+compute IS expensive).
 
-Two implementations with identical semantics:
-
-* ``translate_text_col`` / ``translate_spans`` — pure Catalyst: the
-  ~200-entry dictionary is a ``create_map`` literal, applied with
-  ``transform`` + ``element_at`` inside the span array. No Python, no
-  shuffle (``transform`` is CodegenFallback on Spark 4.1, so the
-  lambda is evaluated interpreted, token by token), and the dictionary
-  ships with the plan (the moral equivalent of a broadcast variable
-  for a dict this small; a million-entry dictionary would instead
-  broadcast-join an exploded token stream).
-* ``translate_series`` — vectorized pandas path (``pd.Series`` map)
-  used by the property test proving both paths agree, and available
-  for rule classes a map literal can't express.
+``translate`` works on one Arrow batch's span texts, flattened: the
+tokens of stage B's ``tokenize`` are looked up in the ~200-entry
+dictionary with ``index_in`` (a hash table built once per batch),
+``take`` the translations, fall back to the token with ``coalesce``
+and are re-joined per span with ``binary_join``. ``pipeline.extract``
+calls it inside its one ``mapInArrow``; ``translate_spans`` wraps it
+in a ``mapInArrow`` of its own. A million-entry dictionary would
+instead broadcast-join an exploded token stream.
 """
 
 from __future__ import annotations
 
-import itertools
-
-from pyspark.sql import Column, DataFrame, functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
 
 from .. import semantics as S
+from .span_arrow import map_spans, regroup
+from .stage_b_boiler import Tokens, tokenize
+
+_KEYS = pa.array(list(S.XLATE_DICT))
+_VALUES = pa.array(list(S.XLATE_DICT.values()))
 
 
-def _dict_map_two_level() -> Column:
-    """map<first_char, map<word, translation>> — GetMapValue on a map
-    literal is a LINEAR scan, so one flat 202-entry map costs ~200
-    string compares per token; bucketing by first character cuts that
-    to ~26 + bucket size (~6x less compare work in the hot loop)."""
-    buckets: dict[str, dict[str, str]] = {}
-    for k, v in S.XLATE_DICT.items():
-        buckets.setdefault(k[0], {})[k] = v
-    pairs = []
-    for c in sorted(buckets):
-        inner = F.create_map(
-            *[
-                F.lit(x)
-                for x in itertools.chain.from_iterable(sorted(buckets[c].items()))
-            ]
-        )
-        pairs += [F.lit(c), inner]
-    return F.create_map(*pairs)
-
-
-def translate_tokens(toks: Column) -> Column:
-    """Dictionary translation over a pre-tokenized span (the fused
-    stage B+C path): map each token through the bucketed dict literal
-    and re-join with single spaces — exactly
-    ``" ".join(XLATE_DICT.get(t.lower(), t) for t in text.split())``."""
-    dict_map = _dict_map_two_level()
-
-    def xlate(t):
-        low = F.lower(t)
-        inner = F.element_at(dict_map, F.substring(low, 1, 1))
-        return F.coalesce(F.element_at(inner, low), t)
-
-    return F.array_join(F.transform(toks, xlate), " ")
-
-
-def translate_text_col(text: Column) -> Column:
-    """Columnar twin of ``semantics.translate_text`` (null-safe).
-    Tokenization matches Python ``str.split()`` exactly (Unicode
-    whitespace, no empty tokens — ``stage_b_boiler.py_tokens_strict``),
-    so tab/NBSP-separated words translate identically to the golden
-    spec (blank text -> empty token list -> "")."""
-    from .stage_b_boiler import py_tokens_strict
-
-    return F.when(text.isNull(), None).otherwise(
-        translate_tokens(py_tokens_strict(text))
+def translate(text: pa.Array, toks: Tokens) -> pa.Array:
+    """``semantics.translate_text`` per span; ``toks`` is
+    ``tokenize(text)``. NULL text stays NULL, blank text becomes ""."""
+    words = pc.coalesce(
+        _VALUES.take(pc.index_in(toks.lower, value_set=_KEYS)), toks.words
     )
+    return pc.binary_join(regroup(words, toks.span, text.is_null()), " ")
 
 
 def translate_spans(df: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Translate the text payload of every span in the array (stage C)."""
-    return df.withColumn(
-        spans_col,
-        F.transform(
-            F.col(spans_col),
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                translate_text_col(s["text"]).alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
-        ),
-    )
+    """Translate the text payload of every span in the array (stage C);
+    other columns pass through."""
 
+    def run(spans: pa.StructArray):
+        fields = {f.name: spans.field(f.name) for f in spans.type}
+        fields["text"] = translate(fields["text"], tokenize(fields["text"]))
+        out = pa.StructArray.from_arrays(list(fields.values()), names=list(fields))
+        return out, np.ones(len(out), bool)
 
-def translate_series(texts):
-    """Vectorized pandas twin (for parity tests / pandas-UDF path)."""
-    import pandas as pd
-
-    def one(t):
-        if t is None:
-            return None
-        return S.translate_text(t)
-
-    return pd.Series([one(t) for t in texts])
+    return map_spans(df, spans_col, run)
 
 
 def translate_texts_with_cache(

@@ -5,16 +5,17 @@ span-sequence equality ``(kind, text, media_ref, order)`` per doc.
 
 Physical shape (what .explain shows):
 
-  main path   documents -> offset sort -> salted repartition (the
-              entry hop) -> LEFT JOIN the per-doc OCR map on doc_id ->
-              one projection: patch OCR text into the span array
-              (element_at), stage B strip (array filter), stage C
-              translate (map literal), re-offset. Span arrays never
-              explode. The projection's stage is compiled, but on
-              Spark 4.1 the higher-order functions it is built from
-              (transform, filter, array_sort, exists) are
-              CodegenFallback: each is evaluated interpreted, element
-              by element.
+  main path   documents -> salted repartition (the entry hop) ->
+              LEFT JOIN the per-doc OCR map on doc_id -> ONE
+              MapInArrow (``_span_pass``). Spark hands it Arrow batches
+              of ``spark.sql.execution.arrow.maxRecordsPerBatch`` docs
+              (512, session.py); each batch's spans are flattened into
+              plain columns and run through ``pyarrow.compute``
+              kernels: stable offset sort, OCR text patch-in, tokenize
+              once, stage B keep rule (stage_b_boiler.keep_mask),
+              stage C translation (stage_c_translate.translate),
+              re-offset, regroup. No Catalyst higher-order function
+              (a CodegenFallback on Spark 4.1) is left on this path.
 
               AQE broadcasts the OCR map at runtime when it is small.
               When it is too large to broadcast, the join plans an
@@ -42,10 +43,17 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import semantics as S
 from .operators.partitioning import media_weight, salted_repartition
+from .operators.span_arrow import flat_spans, regroup
 from .operators.stage_a_ocr import computed_entries, ocr_payloads
+from .operators.stage_b_boiler import keep_mask, tokenize
+from .operators.stage_c_translate import translate
 
 SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
 OUT_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
@@ -58,23 +66,6 @@ class ExtractResult(NamedTuple):
     # persist it before writing ``result`` and the cache merge reuses
     # the OCR pass instead of re-running it.
     ocr_payloads: DataFrame
-
-
-def _sort_spans_by_offset(spans_col):
-    # STABLE sort on an (offset, original-index, span) key struct:
-    # structs compare field by field, so the index breaks offset ties.
-    # The tie-break matters for parity: the golden spec uses Python's
-    # STABLE sorted(key=offset), so two spans sharing an offset (legal
-    # input even though datagen never produces it) must keep their
-    # input order — a bare (offset, span) key would reorder them by
-    # span content instead.
-    keyed = F.transform(
-        spans_col,
-        lambda s, i: F.struct(
-            s["offset"].alias("o"), i.alias("i"), s.alias("s")
-        ),
-    )
-    return F.transform(F.array_sort(keyed), lambda x: x["s"])
 
 
 def extract(
@@ -108,6 +99,14 @@ def extract(
     input) out of the output, split the input with
     ``operators.quarantine.validate_documents`` first; it routes them
     to quarantine with reason ``null_spans``.
+
+    Spans that ``validate_documents`` quarantines still have a defined
+    output. A NULL ``offset`` (reason ``null_offset``; the golden spec
+    cannot sort it) sorts FIRST in its doc, ahead of every non-NULL
+    offset, and several NULL offsets keep their input order. A NULL
+    span element is dropped. A NULL ``kind`` (reason
+    ``unknown_span_kind``) is kept and translated, as
+    ``semantics.extract_doc`` does.
     """
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -121,10 +120,6 @@ def extract(
     else:
         # OCR side: explode ONLY the media refs (a few per doc) from the
         # un-repartitioned input — text spans never leave their array.
-        # The refs come from the UNSORTED spans: their order never
-        # matters (array_distinct, then a per-doc map), and the offset
-        # sort is a CodegenFallback that would otherwise run again under
-        # each of the OCR side's two document scans.
         flag = (
             F.coalesce(F.col(cache_flag_col), F.lit(True))
             if cache_flag_col is not None
@@ -187,17 +182,15 @@ def extract(
             .agg(F.map_from_entries(F.collect_list(pick)).alias("_ocr"))
         )
 
-    # Explicit shuffle boundary (the reference's queue hop) for the B+C
-    # projection and the output write. It spreads docs evenly by count,
+    # Explicit shuffle boundary (the reference's queue hop) for the span
+    # pass and the output write. It spreads docs evenly by count,
     # not by bytes: the salt cannot split a one-row doc (see header).
     # ``pre_partitioned``: the input is ALREADY hash-distributed on
     # doc_id (a bucketed table / Iceberg bucket partition) — skip the
     # full-corpus repartition entirely; with a bucketed source the
     # per-doc OCR-map join needs no shuffle and no sort on the big
     # side, which is the layout a 100 TB deployment would use.
-    main = docs.select(
-        "doc_id", _sort_spans_by_offset(F.col("spans")).alias("spans")
-    )
+    main = docs.select("doc_id", "spans")
     if not pre_partitioned:
         main = salted_repartition(
             main.withColumn("_w", media_weight("spans")),
@@ -207,68 +200,57 @@ def extract(
             salt_buckets=salt_buckets,
             single_row_keys=True,  # one row per doc_id at the entry hop
         ).select("doc_id", "spans")
+    if resolved is not None:
+        main = main.join(resolved, "doc_id", "left")
+    return ExtractResult(main.mapInArrow(_span_pass, OUT_SCHEMA), new_cache, payloads)
 
-    if resolved is None:
-        all_docs = main
-    else:
-        all_docs = main.join(resolved, "doc_id", "left").select(
-            "doc_id",
-            F.transform(
-                F.col("spans"),
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    F.when(
-                        (s["kind"] == F.lit("media"))
-                        & s["media_ref"].isNotNull(),
-                        F.coalesce(
-                            F.element_at(F.col("_ocr"), s["media_ref"]),
-                            s["text"],
-                        ),
-                    )
-                    .otherwise(s["text"])
-                    .alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans"),
+
+def _span_pass(batches):
+    """The span pass over Arrow batches of ``doc_id, spans[, _ocr]``."""
+    for batch in batches:
+        spans = batch.column("spans")
+        flat, row = flat_spans(spans)
+        # stable: the golden spec sorts with Python's sorted(key=offset)
+        order = pc.sort_indices(
+            pa.table({"row": row, "offset": flat.field("offset")}),
+            sort_keys=[("row", "ascending"), ("offset", "ascending")],
+            null_placement="at_start",
+        )
+        flat, row = flat.take(order), row[order.to_numpy()]
+        kind, text, ref = (flat.field(f) for f in ("kind", "text", "media_ref"))
+        if "_ocr" in batch.schema.names:
+            text = _patch_ocr(batch.column("_ocr"), row, kind, text, ref)
+        toks = tokenize(text)
+        kept = np.flatnonzero(keep_mask(kind, text, toks))
+        row = row[kept]
+        out = pa.StructArray.from_arrays(
+            [
+                kind.take(kept),
+                translate(text, toks).take(kept),
+                ref.take(kept),
+                # re-offset: position among the row's kept spans
+                pa.array(np.arange(len(row)) - np.searchsorted(row, row), pa.int32()),
+            ],
+            names=["kind", "text", "media_ref", "offset"],
+        )
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("doc_id"), regroup(out, row, spans.is_null())],
+            names=["doc_id", "spans"],
         )
 
-    # Stages B + C + re-offset fused into ONE expression chain that
-    # tokenizes each span EXACTLY ONCE: an inner transform materializes
-    # the Python-split token array into the span struct (a nested
-    # transform node is evaluated once per row — the per-element
-    # re-evaluation hazard applies to outer subtrees referenced inside
-    # lambdas, not to the lambda's own input), the keep filter and the
-    # dictionary translation then both read that array. The unfused
-    # strip_boilerplate + translate_spans operators (same semantics,
-    # used standalone and by tests) tokenize 3x per span — measured
-    # ~25% slower end-to-end on the extraction headline after the
-    # whitespace-parity fix priced tokenization up.
-    from .operators.stage_b_boiler import keep_from_tokens, py_tokens_strict
-    from .operators.stage_c_translate import translate_tokens
 
-    toked = F.transform(
-        F.col("spans"),
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            py_tokens_strict(s["text"]).alias("toks"),
-        ),
-    )
-    kept = F.filter(
-        toked, lambda t: keep_from_tokens(t["kind"], t["text"], t["toks"])
-    )
-    spans_out = F.transform(
-        kept,
-        lambda t, i: F.struct(
-            t["kind"].alias("kind"),
-            F.when(t["text"].isNull(), None)
-            .otherwise(translate_tokens(t["toks"]))
-            .alias("text"),
-            t["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    result = all_docs.select("doc_id", spans_out.alias("spans"))
-    return ExtractResult(result, new_cache, payloads)
+def _patch_ocr(ocr: pa.MapArray, row, kind, text, ref) -> pa.Array:
+    """A media span's text becomes its doc's OCR text for its ref, when
+    the doc's ``ocr`` map has a non-NULL one."""
+    # pc.list_parent_indices aborts the worker on a MapArray: walk the
+    # offsets (they index the unsliced keys and items)
+    offsets = ocr.offsets.to_numpy()
+    owner = np.repeat(np.arange(len(ocr)), np.diff(offsets))
+    entries = slice(offsets[0], offsets[-1])
+
+    def keyed(rows, refs):  # "<row>:<ref>" is unique: a row is digits only
+        return pc.binary_join_element_wise(pa.array(rows).cast(pa.string()), refs, ":")
+
+    hit = pc.index_in(keyed(row, ref), value_set=keyed(owner, ocr.keys[entries]))
+    is_media = pc.fill_null(pc.equal(kind, S.KIND_MEDIA), False)
+    return pc.if_else(is_media, pc.coalesce(ocr.items[entries].take(hit), text), text)

@@ -679,10 +679,11 @@ def test_entry_smoke(spark):
 
 def test_flagship_plan_shape(spark):
     """Pin the flagship's physical plan: exactly ONE exchange (the
-    explicit salted doc_id repartition) and ZERO Python crossings —
-    stage B strip + stage C translate are pure JVM column expressions.
-    Perf drift from an added shuffle or an accidental Python UDF shows
-    up here before it shows up as an un-adjudicable bench delta."""
+    explicit salted doc_id repartition) and exactly ONE Python
+    crossing — the ``MapInArrow`` span pass that runs stage B strip +
+    stage C translate over Arrow batches. Perf drift from an added
+    shuffle or an accidental Python UDF shows up here before it shows
+    up as an un-adjudicable bench delta."""
     df = QUERIES["extract_flagship"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -697,3 +698,4 @@ def test_flagship_plan_shape(spark):
         "PythonUDF",
     ):
         assert marker not in plan, f"flagship gained a {marker} crossing"
+    assert plan.count("MapInArrow") == 1, plan

@@ -3,16 +3,19 @@ spec ``semantics.extract_doc`` — one Spark job per configuration over a
 seed-fixed random corpus (the repo's randomized-parity pattern: broad
 input coverage without per-example Spark jobs).
 
-The corpus plants the edge shapes the OCR branch and the fused B+C
-chain must agree with the golden spec on:
+The corpus plants the edge shapes the OCR branch and the Arrow span
+pass must agree with the golden spec on:
 
 * media refs shared across documents, and two refs with identical bytes;
 * a media ref missing from the media table, and a media span with a
   NULL ref;
 * spans sharing an offset (the golden spec's sort is stable);
-* NULL text, empty text and empty span lists;
+* NULL text, empty text, empty span lists and NULL kinds;
 * Python whitespace beyond ASCII (NBSP, em space, ideographic space,
   NEL, the C0 separators) inside text and OCR tokens;
+* words whose lowering is a special case: ``İs`` (Python lowers U+0130
+  to ``i̇``, so it must not hit ``is``), the Kelvin sign in ``KEY`` and a
+  capital final sigma;
 * per-document ``cached`` flags (True / False / NULL) against an OCR
   cache that hits only part of the referenced payloads.
 
@@ -39,9 +42,10 @@ _VOCAB = (
     list(S._CORE_DICT)[:40]
     + list(S.BOILER_TOKENS)[:12]
     + ["Spark", "THE", "zzq", "naïve", "Straße", "x1", "", "ok"]
+    + ["\u0130s", "\u212aEY", "ΟΔΟΣ"]
 )
 _KINDS = ("text", "text", "text", "media", "media", "boiler", "tag_open",
-          "tag_close")
+          "tag_close", None)
 
 
 def _text(rng):

@@ -3,6 +3,7 @@ and the streaming wrapper."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from ocr_translation_spark import datagen as G
@@ -12,9 +13,14 @@ from ocr_translation_spark.operators.partitioning import (
     media_weight,
     salted_repartition,
 )
+from ocr_translation_spark.operators.stage_b_boiler import (
+    keep_mask,
+    strip_boilerplate,
+    tokenize,
+)
 from ocr_translation_spark.operators.stage_c_translate import (
-    translate_series,
-    translate_text_col,
+    translate,
+    translate_spans,
 )
 from ocr_translation_spark.sources.catalog import Catalog
 from tests.conftest import load_fixture
@@ -95,22 +101,14 @@ def test_catalog_merge_idempotent(spark, tmp_path):
     assert got == {"h1": "r1", "h2": "r2", "h3": "r3"}
 
 
-def test_translate_native_equals_pandas(spark):
+def test_translate_matches_golden():
     texts = [
         "the fast spark", "", None, "UNKNOWN words HERE",
         "The  Fast   batch", "a of in on with",
     ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    native = [
-        r["out"]
-        for r in df.select(translate_text_col(F.col("text")).alias("out")).collect()
-    ]
-    pandas_side = list(translate_series(texts))
-    assert native == pandas_side
-    # and both equal the golden function
-    for t, n in zip(texts, native):
-        if t is not None:
-            assert n == S.translate_text(t)
+    arr = pa.array(texts, pa.string())
+    got = translate(arr, tokenize(arr)).to_pylist()
+    assert got == [None if t is None else S.translate_text(t) for t in texts]
 
 
 def test_stream_extract_availablenow(spark, fixture_dir, tmp_path):
@@ -233,50 +231,27 @@ def test_asof_backward_matches_brute_force(spark):
         assert got[lid] == expect, (lid, got[lid], expect)
 
 
-def test_stage_b_and_c_whitespace_parity_with_golden(spark):
+def test_stage_b_and_c_whitespace_parity_with_golden():
     """Tab/NBSP whitespace must behave exactly like the golden spec's
     str.strip()/str.split(): whitespace-only spans drop, leading tabs
     don't dilute the boiler score, interior unicode whitespace splits
     for translation (review finding, reproduced pre-fix)."""
-    from pyspark.sql import functions as F
-
-    from ocr_translation_spark import semantics as S
-    from ocr_translation_spark.operators.stage_b_boiler import (
-        keep_span_predicate,
-    )
-    from ocr_translation_spark.operators.stage_c_translate import (
-        translate_text_col,
-    )
-
     texts = [
         "\t",                      # whitespace-only: golden drops
         "\n\n",
-        " ",                  # NBSP: python strip() removes it
+        "\u00a0",                  # NBSP: python strip() removes it
         "\tclick here x",          # leading tab: golden 2/3 boiler
-        "the fast cat",       # interior NBSP splits in golden
+        "the\u00a0fast cat",       # interior NBSP splits in golden
         " normal words here ",
         "",
     ]
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "i long, text string")
-    got = {
-        r["i"]: (r["keep"], r["xlate"])
-        for r in df.select(
-            "i",
-            keep_span_predicate(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    F.col("text").alias("text"),
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).alias("offset"),
-                )
-            ).alias("keep"),
-            translate_text_col(F.col("text")).alias("xlate"),
-        ).collect()
-    }
-    for i, t in rows:
-        assert got[i][0] == S.keep_span("text", t), (i, repr(t))
-        assert got[i][1] == S.translate_text(t), (i, repr(t))
+    arr = pa.array(texts)
+    toks = tokenize(arr)
+    keep = keep_mask(pa.array(["text"] * len(texts)), arr, toks)
+    xlate = translate(arr, toks).to_pylist()
+    for i, t in enumerate(texts):
+        assert keep[i] == S.keep_span("text", t), (i, repr(t))
+        assert xlate[i] == S.translate_text(t), (i, repr(t))
 
 
 def test_span_sort_is_stable_like_golden(spark):
@@ -308,6 +283,87 @@ def test_span_sort_is_stable_like_golden(spark):
         for s in S.extract_doc(spans, {})
     ]
     assert got == exp  # middle, zebra, apple — input order on ties
+
+
+def test_null_offsets_sort_first_in_input_order(spark):
+    """The golden spec cannot sort a NULL offset (validate_documents
+    quarantines it as ``null_offset``); extract() pins one placement:
+    NULL offsets first, among themselves in input order. A NULL span
+    element is dropped."""
+    from ocr_translation_spark.pipeline import SPAN_STRUCT, extract
+
+    def span(word, offset):
+        return {"kind": "text", "text": word, "media_ref": None,
+                "offset": offset}
+
+    docs = spark.createDataFrame(
+        [
+            ("d1", [span("a", None), span("b", 1), span("c", 0)]),
+            ("d2", [span("a", None), span("b", 1), None, span("c", 0),
+                    span("d", None)]),
+        ],
+        f"doc_id string, spans array<{SPAN_STRUCT}>",
+    )
+    got = {
+        r["doc_id"]: [(s["text"], s["offset"]) for s in r["spans"]]
+        for r in extract(spark, docs, None).result.collect()
+    }
+    assert got == {
+        "d1": [("một", 0), ("c", 1), ("b", 2)],
+        "d2": [("một", 0), ("d", 1), ("c", 2), ("b", 3)],
+    }
+
+
+def test_standalone_strip_and_translate_match_golden(spark, fixture_dir):
+    """strip_boilerplate keeps exactly the spans semantics.keep_span
+    keeps (offsets untouched); translate_spans applies
+    semantics.translate_text to every span's text; both pass other
+    columns through unchanged."""
+    from ocr_translation_spark.pipeline import SPAN_STRUCT
+
+    def span(kind, text, offset):
+        return {"kind": kind, "text": text, "media_ref": None,
+                "offset": offset}
+
+    edge = spark.createDataFrame(
+        [
+            ("e1", [span(None, "the fast", 0), span("text", "\t", 1),
+                    span("tag_open", "<p>", 2), span("text", None, 3),
+                    span("text", "click here x", 4)]),
+            ("e2", None),
+            ("e3", []),
+        ],
+        f"doc_id string, spans array<{SPAN_STRUCT}>",
+    )
+    docs = (
+        load_fixture(spark, fixture_dir, "documents")
+        .select("doc_id", "spans")
+        .unionByName(edge)
+        .withColumn("_n", F.size("spans"))
+    )
+    inp = {r["doc_id"]: r for r in docs.collect()}
+
+    def rows(df):
+        out = {r["doc_id"]: r for r in df.collect()}
+        assert set(out) == set(inp)
+        for d, r in out.items():
+            assert r["_n"] == inp[d]["_n"], d
+        return {d: r["spans"] for d, r in out.items()}
+
+    stripped = rows(strip_boilerplate(docs))
+    translated = rows(translate_spans(docs))
+    for d, r in inp.items():
+        if r["spans"] is None:
+            assert stripped[d] is None and translated[d] is None
+            continue
+        assert stripped[d] == [
+            s for s in r["spans"] if S.keep_span(s["kind"], s["text"])
+        ], d
+        assert [s.asDict() for s in translated[d]] == [
+            dict(s.asDict(), text=None if s["text"] is None
+                 else S.translate_text(s["text"]))
+            for s in r["spans"]
+        ], d
 
 
 def test_dedup_cache_null_and_empty_payload_distinct(spark):
@@ -386,23 +442,24 @@ def test_ingest_media_dir_duplicate_files_one_row(spark, tmp_path):
     assert all(k == "png" for k in kinds.values())
 
 
-def test_py_ws_class_matches_python_isspace(spark):
-    """PY_WS_CLASS must match EXACTLY the code points Python's
-    str.isspace()/split()/strip() treat as whitespace — no more (ZWSP,
-    word-joiner, BOM are NOT python whitespace), no fewer."""
-    from pyspark.sql import functions as F
-
-    from ocr_translation_spark.operators.stage_b_boiler import PY_WS_CLASS
-
-    ws = [chr(i) for i in range(0x10000) if chr(i).isspace()]
-    nonws = ["a", "0", ".", "​", "⁠", "﻿", "᠎"]
-    rows = [(c,) for c in ws + nonws]
-    df = spark.createDataFrame(rows, "c string")
-    got = df.select(
-        "c", F.col("c").rlike(f"^{PY_WS_CLASS}$").alias("m")
-    ).collect()
-    for r in got:
-        assert r["m"] == r["c"].isspace(), hex(ord(r["c"]))
+def test_tokenize_matches_python_split():
+    """tokenize must split exactly where str.split() does — no more
+    (ZWSP, word-joiner, BOM are NOT python whitespace), no fewer — with
+    every BMP code point as a separator, a leading or trailing
+    character, and doubled (utf8_split_whitespace yields '' pieces for
+    the last three). Its lowering may differ from str.lower() only
+    where neither side is ASCII: the dictionary and boiler keys are
+    ASCII, so such a difference can never change a hit."""
+    chars = [chr(i) for i in range(0x10000) if not 0xD800 <= i < 0xE000]
+    texts = [t for c in chars for t in (f"a{c}b", f"{c}a", f"a{c}", f"a{c}{c}b")]
+    toks = tokenize(pa.array(texts))
+    assert toks.count.tolist() == [len(t.split()) for t in texts]
+    words = [w for t in texts for w in t.split()]
+    assert toks.words.to_pylist() == words
+    for w, low in zip(words, toks.lower.to_pylist()):
+        assert low == w.lower() or not (low.isascii() or w.lower().isascii()), (
+            hex(ord(w[1])) if len(w) > 1 else w
+        )
 
 
 def test_run_curation_cli(spark, tmp_path):

@@ -7,11 +7,9 @@ plan — so these tests pin the physical shape the optimization rounds
 measured:
 
 * extract_flagship shape — exactly ONE ``Exchange hashpartitioning``
-  (the explicit salted queue-hop repartition; derive + stage B/C stay
-  one fused expression chain in a single projection) and ZERO
-  Python-evaluation nodes (media=None: stage A never runs; B+C are
-  Catalyst higher-order functions, which Spark 4.1 evaluates
-  interpreted as CodegenFallback).
+  (the explicit salted queue-hop repartition) and exactly ONE Python
+  node, the ``MapInArrow`` span pass (offset sort, stage B, stage C,
+  re-offset over Arrow batches); media=None, so stage A never runs.
 * minhash_near_dup — the banded candidate path's RUNTIME stage count:
   distinct ShuffleQueryStage ids after execution (textual Exchange
   counts overcount badly here because the persisted shingle+signature
@@ -21,9 +19,9 @@ measured:
 * extract with media and a ``Catalog``-loaded OCR cache — stage A is
   one path: one ``MapInPandas``, the media table and the cache each
   scanned once, the media payloads never broadcast, no full-outer
-  join, the offset sort (``array_sort``, a CodegenFallback) evaluated
-  once, and a join/exchange budget below the forked branch it
-  replaced.
+  join, one ``MapInArrow`` span pass and no ``array_sort`` (the
+  offset sort runs inside it), and a join/exchange budget below the
+  forked branch it replaced.
 
 A companion test proves the exchange gate genuinely fires on an
 injected extra ``repartition``.
@@ -78,11 +76,12 @@ def _flagship(spark):
     return extract(spark, span_docs, media=None).result
 
 
-def test_flagship_single_exchange_no_python(spark):
+def test_flagship_single_exchange_one_map_in_arrow(spark):
     df = _flagship(spark)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert not any(m in plan for m in _PY_NODES), plan
+    assert sum(plan.count(m) for m in _PY_NODES) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_flagship_extra_repartition_detected(spark):
@@ -135,6 +134,7 @@ def test_extract_media_with_cache_one_ocr_path(spark, fixture_dir, tmp_path):
     plan = _final_plan(extract(spark, docs, media, ocr_cache=cache).result)
 
     assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     media_scans = _ancestors(plan, _MEDIA_SCAN)
     assert len(media_scans) == 1, plan
     # the payloads are never a broadcast build side: the first exchange
@@ -145,10 +145,9 @@ def test_extract_media_with_cache_one_ocr_path(spark, fixture_dir, tmp_path):
     assert len(_ancestors(plan, _CACHE_SCAN)) == 1, plan
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
     assert "FullOuter" not in plan, plan
-    # the main path sorts spans once; the OCR side takes its refs from
-    # the unsorted input (it sorted under each of its two document
-    # scans too, three sorts in all)
-    assert plan.count("array_sort(") == 1, plan
+    # the offset sort runs inside the MapInArrow span pass; the OCR
+    # side takes its refs from the unsorted input
+    assert plan.count("array_sort(") == 0, plan
     # the forked branch this replaced planned 9 joins and 13 hash
     # exchanges (ReusedExchange included) for this call on this fixture
     assert len(_JOINS.findall(plan)) <= 4, plan

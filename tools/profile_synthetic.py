@@ -6,11 +6,10 @@ pipeline over the bench corpus, so the marginal cost of every stage is
 the difference between adjacent rows:
 
   scan            force the raw documents scan
-  sort            + span offset-sort projection
   ocr_side        the OCR half alone (distinct refs -> mapInPandas ->
                   per-doc map)
-  join            sort + repartition + OCR-map join (no B/C)
-  full            the complete extract() (join + fused B+C + reoffset)
+  full            the complete extract() (repartition + OCR-map join +
+                  the mapInArrow span pass: sort, B, C, re-offset)
 
 Usage: python tools/profile_synthetic.py [repeats]   (default 3)
 Env:   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SYN_DOCS (default 8000)
@@ -28,10 +27,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from ocr_translation_spark.datagen import write_fixture_parquet  # noqa: E402
-from ocr_translation_spark.pipeline import (  # noqa: E402
-    _sort_spans_by_offset,
-    extract,
-)
+from ocr_translation_spark.pipeline import extract  # noqa: E402
 from ocr_translation_spark.session import get_spark  # noqa: E402
 
 
@@ -68,12 +64,6 @@ def main() -> None:
         return time.monotonic() - t0
 
     timed("scan", lambda: docs)
-    timed(
-        "sort",
-        lambda: docs.select(
-            "doc_id", _sort_spans_by_offset(F.col("spans")).alias("spans")
-        ),
-    )
 
     def ocr_side():
         from ocr_translation_spark.operators.stage_a_ocr import (
